@@ -1,9 +1,9 @@
 #!/usr/bin/env python3
-"""Benchmark of the graft engine: one command, two workloads.
+"""Benchmark of the graft engine: one command, three workloads.
 
 Usage (from the root of a checkout):
 
-    python3 perfbench/run.py --workload daily_etl --seed 1 --seconds 12 --trace 0
+    python3 perfbench/run.py --workload daily_etl --seed 1 --seconds 8 --trace 0
 
 It builds the program from source (once per checkout and source state),
 generates the workload's inputs from the seed, runs the workload in one
@@ -20,6 +20,7 @@ output check failed. See perfbench/README.md.
 import argparse
 import hashlib
 import json
+import math
 import os
 import shutil
 import statistics
@@ -31,16 +32,17 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 sys.path.insert(0, HERE)
 
-WORKLOADS = ("daily_etl", "index_churn")
+WORKLOADS = ("daily_etl", "index_churn", "query_catalog")
 CORES = len(os.sched_getaffinity(0))  # local[nproc], as graft.Bench runs
 JVM_TIMEOUT_S = 170
 
 # workload sizes (see README.md for why)
-ETL_CITIES = 6
-ETL_DAYS = 3
-CHURN_DOCS = 1000
-CHURN_VECS = 1000
-
+ETL_CITIES = 3
+ETL_HISTORY = 8      # run dates staged in set-up
+ETL_DAYS = ETL_HISTORY + 8  # + at most 8 timed days
+CHURN_DOCS = 600
+CHURN_VECS = 240
+CATALOG_SF = 0.001
 
 
 def spec():
@@ -121,28 +123,37 @@ def generate(workload, seed, input_dir):
     import gen
     if workload == "daily_etl":
         gen.weather_docs(os.path.join(input_dir, "weather"), seed, ETL_CITIES, ETL_DAYS)
-        checks.etl_expected(input_dir, seed, ETL_CITIES, ETL_DAYS)
-    else:
+        checks.etl_expected(input_dir, seed, ETL_CITIES, ETL_HISTORY, ETL_DAYS)
+    elif workload == "index_churn":
         gen.corpus(os.path.join(input_dir, "corpus"), seed, CHURN_DOCS, CHURN_VECS)
+    else:
+        gen.tables(os.path.join(input_dir, "tables"), seed, CATALOG_SF)
 
 
 def workload_metrics(workload, res, attempted, failed, setup_s):
     """Every end-to-end metric of the workload, by its own name, with unit."""
     s = res["samples"]
     med = lambda k: statistics.median(s[k]) if s.get(k) else 0.0
+    mean = lambda k: statistics.mean(s[k]) if s.get(k) else 0.0
     m = {"setup_s": (setup_s, "s"),
          "fail_ratio": (failed / max(1, attempted), "ratio"),
          "peak_rss_mb": (res["env"]["peak_rss_mb"], "MB")}
     if workload == "daily_etl":
         m["etl_day_p50_s"] = (med("day_s"), "s")
         m["etl_readings_per_s"] = (res["values"].get("readings_per_s", 0.0), "1/s")
-        op, cycle = med("day_s"), med("cycle_s")
-    else:
+        op, cycle = mean("day_s"), med("day_s")  # one cycle of the loop is one day
+    elif workload == "index_churn":
         m["ingest_p50_s"] = (med("ingest_s"), "s")
         m["lookup_p50_s"] = (med("lookup_s"), "s")
         m["compact_p50_s"] = (med("compact_s"), "s")
-        op, cycle = med("step_s"), med("cycle_s")
-    m["op_p50_s"] = (op, "s")
+        op, cycle = mean("step_s"), med("cycle_s")
+    else:
+        q = sorted(s.get("query_s", []))
+        m["catalog_s"] = (med("catalog_s"), "s")
+        m["query_p50_s"] = (med("query_s"), "s")
+        m["query_p95_s"] = (q[math.ceil(0.95 * len(q)) - 1] if q else 0.0, "s")  # nearest rank
+        op, cycle = mean("query_s"), med("catalog_s")
+    m["op_mean_s"] = (op, "s")
     m["cycle_s"] = (cycle, "s")
     return m
 
@@ -164,6 +175,7 @@ def main():
     input_dir, work = os.path.join(run_dir, "input"), os.path.join(run_dir, "work")
     os.makedirs(os.path.join(work, "tmp"))
     generate(a.workload, a.seed, input_dir)
+    generate_s = time.time() - t_start
 
     out_file = os.path.join(run_dir, "result.json")
     args = ["--workload", a.workload, "--seed", str(a.seed), "--seconds", str(a.seconds),
@@ -178,17 +190,24 @@ def main():
             proc.wait()
             code = "timeout"
     if code != 0 or not os.path.isfile(out_file):
+        with open(os.path.join(run_dir, "jvm.log"), errors="replace") as f:
+            tail = [l.rstrip() for l in f if "ERROR" in l or "Exception" in l or "Error:" in l][-20:]
+        print("\n".join(tail), file=sys.stderr)
         sys.exit(f"perfbench: the benchmark JVM ended with {code}; see {run_dir}/jvm.log")
     with open(out_file) as f:
         res = json.load(f)
 
-    post = []  # failed post-run output checks, each one more failed op
-    if a.workload == "daily_etl" and "last_episode" in res["values"]:
-        import checks
-        episode = os.path.join(work, "etl", f"ep{int(res['values']['last_episode'])}")
-        post = checks.etl_outputs(input_dir, episode)
+    import checks
+    post = []  # failed post-run output checks
+    if a.workload == "daily_etl" and "last_day" in res["values"]:
+        post = checks.etl_outputs(input_dir, os.path.join(work, "etl"), int(res["values"]["last_day"]))
+    elif a.workload == "query_catalog" and os.path.isdir(os.path.join(work, "catalog")):
+        post = checks.catalog_outputs(os.path.join(input_dir, "tables"), os.path.join(work, "catalog"))
     errors = res["errors"] + post
-    attempted, failed = res["attempted"] + len(post), res["failed"] + len(post)
+    # a query whose result fails its oracle check is a failed op; the
+    # daily_etl checks of the tables on disk are ops of their own
+    extra_ops = 0 if a.workload == "query_catalog" else len(post)
+    attempted, failed = res["attempted"] + extra_ops, res["failed"] + len(post)
     correct = not errors and failed == 0
 
     # no timed op ran (the workload aborted in set-up): no set-up time either
@@ -196,6 +215,7 @@ def main():
     m = workload_metrics(a.workload, res, attempted, failed, setup_s)
     record = {"workload": a.workload, "seed": a.seed, "seconds": a.seconds, "trace": a.trace,
               "metrics": {k: {"value": v, "unit": u} for k, (v, u) in m.items()},
+              "values": {"setup.generate_s": generate_s, **res["values"]},
               "layers": res["layers"], "env": res["env"], "nproc": os.cpu_count(),
               "commit": commit(), "source_hash": source_hash(), "errors": errors}
     with open(os.path.join(run_dir, "record.json"), "w") as f:

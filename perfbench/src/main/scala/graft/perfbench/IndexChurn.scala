@@ -9,14 +9,12 @@ import graft.weather.Staging
 
 /** index_churn: the LLM-data indexes as a long-lived service. A seeded 10%
   * of the documents and embeddings is held out; the pair-graph MV, the NSW
-  * index and the IVF index are built over the rest. Each step then ingests
-  * one held-out batch into all three chains and runs one lookup against
-  * each; every `compactEvery`-th step ends by compacting all three chains.
+  * index and the IVF index are built over the rest. The timed cycle then
+  * ingests the held-out batch into all three chains (one step), runs one
+  * lookup against each, and compacts all three chains.
   */
 object IndexChurn {
 
-  val batches = 11
-  val compactEvery = 2
   private val k = 3        // top-k of the registered NSW and IVF query batches
   private val queries = 5  // vec_id < 5 form the query batch
 
@@ -28,10 +26,8 @@ object IndexChurn {
     val docs = Tables.documents(spark, corpusDir)
     val heldDoc = $"doc_id" % 10 === r
     val heldVec = $"vec_id" >= queries && $"vec_id" % 10 === r
-    def docBatch(b: Int) = docs.filter(heldDoc && ($"doc_id" / 10).cast("long") % batches === b)
-      .select($"doc_id", $"text")
-    def vecBatch(b: Int) = Tables.embeddings(spark, corpusDir)
-      .filter(heldVec && ($"vec_id" / 10).cast("long") % batches === b)
+    def docBatch = docs.filter(heldDoc).select($"doc_id", $"text")
+    def vecBatch = Tables.embeddings(spark, corpusDir).filter(heldVec)
       .select($"vec_id", $"embedding".as("v"))
       .withColumn("nrm", Embeddings.norm($"v"))
     val resident: DataFrame => DataFrame = _.filter(!heldVec)
@@ -39,23 +35,25 @@ object IndexChurn {
     // set-up: the resident corpus as its own dataset dir (the pair-graph MV
     // is keyed by dir), then the three builds
     val pgDir = s"${ctx.work}/churn/pg_corpus"
-    docs.filter(!heldDoc).write.mode("overwrite").parquet(s"$pgDir/documents.parquet")
-    val pgRoot = TextDedup.refreshPairGraphMv(spark, pgDir)
-    val nswRoot = Embeddings.buildNswIndex(spark, corpusDir, "churn", resident)
-    val ivfRoot = Embeddings.buildIvfIndex(spark, corpusDir, "churn", resident)
+    val pgRoot = ctx.setupStep("pg_build") {
+      docs.filter(!heldDoc).write.mode("overwrite").parquet(s"$pgDir/documents.parquet")
+      TextDedup.refreshPairGraphMv(spark, pgDir)
+    }
+    val nswRoot = ctx.setupStep("nsw_build")(Embeddings.buildNswIndex(spark, corpusDir, "churn", resident))
+    val ivfRoot = ctx.setupStep("ivf_build")(Embeddings.buildIvfIndex(spark, corpusDir, "churn", resident))
 
     def topK(rows: Array[Row]): Boolean = {
       val perQ = rows.groupBy(_.getAs[Long]("qid")).map { case (q, rs) => q -> rs.length }
       perQ.size == queries && perQ.values.forall(_ == k)
     }
-    def ingest(b: Int): Boolean = ctx.tracer.span("ingest") {
-      ctx.tracer.span("pg_append")(TextDedup.appendPairGraphMv(spark, pgDir, docBatch(b)))
+    def ingest(): Boolean = ctx.tracer.span("ingest") {
+      ctx.tracer.span("pg_append")(TextDedup.appendPairGraphMv(spark, pgDir, docBatch))
       ctx.tracer.span("nsw_append")(
-        Embeddings.appendNswIndex(spark, corpusDir, vecBatch(b), "churn", resident))
-      ctx.tracer.span("ivf_append")(Embeddings.appendIvfIndex(spark, ivfRoot, vecBatch(b)))
+        Embeddings.appendNswIndex(spark, corpusDir, vecBatch, "churn", resident))
+      ctx.tracer.span("ivf_append")(Embeddings.appendIvfIndex(spark, ivfRoot, vecBatch))
       true
     }
-    def lookup(b: Int): Boolean = ctx.tracer.span("lookup") {
+    def lookup(): Boolean = ctx.tracer.span("lookup") {
       // every result is collected: all columns of all rows reach the caller
       val labels = ctx.tracer.span("pg_read")(TextDedup.componentLabels(spark, pgDir).collect())
       val nsw = ctx.tracer.span("nsw_read")(
@@ -64,7 +62,7 @@ object IndexChurn {
         Embeddings.ivfQueryFromIndex(spark, corpusDir, ivfRoot).collect())
       val ok = labels.nonEmpty && labels.map(_.getLong(0)).distinct.length == labels.length &&
         topK(nsw) && topK(ivf)
-      if (!ok) ctx.errors += s"lookup step $b: labels=${labels.length} nsw=${nsw.length} ivf=${ivf.length}"
+      if (!ok) ctx.errors += s"lookup: labels=${labels.length} nsw=${nsw.length} ivf=${ivf.length}"
       ok
     }
     def compact(): Boolean = ctx.tracer.span("compact") {
@@ -73,43 +71,24 @@ object IndexChurn {
       ctx.tracer.span("ivf_compact")(Embeddings.compactIvfIndex(spark, ivfRoot))
       Seq(pgRoot, nswRoot, ivfRoot).forall(Staging.chainVersions(spark, _).size == 1)
     }
-    // warm-up, part of set-up: one untimed step (batch 0), so timed steps
-    // pay no first-run compilation
-    require(ingest(0) && lookup(0), "warm-up step failed")
-
-    // closed loop in whole compaction cycles: `compactEvery` steps, then
-    // one compaction of all three chains
-    var step = 1
-    while (step + compactEvery <= batches && (step == 1 || ctx.elapsedSinceFirstOp < ctx.seconds)) {
-      var cycle = 0.0
-      var cycleOk = true
-      for (_ <- 0 until compactEvery) {
-        val b = step
-        val i = ctx.timed(s"ingest step $b")(ingest(b))
-        if (ctx.tracer.enabled) Seq("pg" -> pgRoot, "nsw" -> nswRoot, "ivf" -> ivfRoot).foreach {
-          case (n, root) => ctx.sample(s"${n}_read.chain_len", Staging.chainVersions(spark, root).size)
-        }
-        val l = ctx.timed(s"lookup step $b")(lookup(b))
-        (i, l) match {
-          case (Some(i), Some(l)) =>
-            ctx.sample("ingest_s", i); ctx.sample("lookup_s", l); ctx.sample("step_s", i + l)
-            cycle += i + l
-          case _ => cycleOk = false
-        }
-        step += 1
-      }
-      ctx.timed(s"compact after step ${step - 1}")(compact()).foreach { t =>
-        ctx.sample("compact_s", t)
-        if (cycleOk) ctx.sample("cycle_s", cycle + t)
-      }
+    // one cycle, each op waited on. No warm-up step: the ingest and the
+    // lookup pay their first compilation, as in a service's first batch
+    // after the indexes are built
+    val i = ctx.timed("ingest")(ingest())
+    if (ctx.tracer.enabled) Seq("pg" -> pgRoot, "nsw" -> nswRoot, "ivf" -> ivfRoot).foreach {
+      case (n, root) => ctx.sample(s"${n}_read.chain_len", Staging.chainVersions(spark, root).size)
     }
-    ctx.values("steps") = step.toDouble
+    val l = ctx.timed("lookup")(lookup())
+    val c = ctx.timed("compact")(compact())
+    for (i <- i; l <- l) {
+      ctx.sample("ingest_s", i); ctx.sample("lookup_s", l); ctx.sample("step_s", i + l)
+    }
+    c.foreach(ctx.sample("compact_s", _))
+    for (i <- i; l <- l; c <- c) ctx.sample("cycle_s", i + l + c)
 
     // output checks, outside the timed region
-    val appendedDocs = (0 until step).map(docBatch).reduce(_ unionByName _)
-      .select($"doc_id").as[Long].collect().toSet
-    val appendedVecs = (0 until step).map(vecBatch).reduce(_ unionByName _)
-      .select($"vec_id").as[Long].collect().toSet
+    val appendedDocs = docBatch.select($"doc_id").as[Long].collect().toSet
+    val appendedVecs = vecBatch.select($"vec_id").as[Long].collect().toSet
     // append == rebuild: labels after the appends equal a from-scratch
     // refresh over the same corpus
     val fullDir = s"${ctx.work}/churn/pg_full"
@@ -142,7 +121,7 @@ object IndexChurn {
   def layers(ctx: Ctx, spans: Seq[Span], bySpan: Map[Int, Seq[JobRec]]): Unit = {
     for (name <- layerSpans)
       ctx.layers ++= Layers.spanCounters(name, spans, bySpan, ctx.cores,
-        Seq("wall_s", "wall_share", "jobs", "tasks", "task_s", "busy"))
+        Seq("wall_s", "jobs", "tasks", "task_s", "busy"))
     for (n <- Seq("pg", "nsw", "ivf"))
       ctx.layers(s"${n}_read.chain_len") =
         Layers.median(ctx.samples.get(s"${n}_read.chain_len").map(_.toSeq).getOrElse(Nil))

@@ -26,6 +26,12 @@ final class Ctx(val spark: SparkSession, val input: String, val work: String,
 
   def markFirstOp(): Unit = if (firstOpAt == 0L) firstOpAt = System.currentTimeMillis()
 
+  /** A named step of set-up; its wall seconds go to `values` as `setup.<name>_s`. */
+  def setupStep[A](name: String)(body: => A): A = {
+    val t0 = System.nanoTime()
+    try body finally values(s"setup.${name}_s") = (System.nanoTime() - t0) / 1e9
+  }
+
   /** Run one timed op: its wall time in seconds, or None when it threw or
     * its output check failed. Either way it counts as attempted, and a
     * failure never contributes a time.
@@ -73,14 +79,14 @@ object Main {
     val work = opts("work")
     val traced = opts.get("trace").contains("1")
     val tuningDir = workload match {
-      // the pipeline reads only its raw landing zone, which is empty when
-      // the session starts: Tuning then takes its unmeasured-input branch
-      case "daily_etl"   => s"$work/etl"
-      case "index_churn" => s"$input/corpus"
-      case other         => sys.error(s"unknown workload $other")
+      case "daily_etl"     => s"$input/weather"
+      case "index_churn"   => s"$input/corpus"
+      case "query_catalog" => s"$input/tables"
+      case other           => sys.error(s"unknown workload $other")
     }
     // the session graft.Bench builds: Tuning against the workload's input,
     // UTC, the graft extensions, local[cores]
+    val t0 = System.nanoTime()
     val spark = graft.ops.Tuning.configure(
         SparkSession.builder().master(s"local[$cores]").appName(s"perfbench-$workload"),
         tuningDir, cores)
@@ -96,6 +102,7 @@ object Main {
 
     val ctx = new Ctx(spark, input, work, opts("seed").toLong, opts("seconds").toDouble,
       cores, new Tracer(traced, s"$workload-${opts("seed")}"))
+    ctx.values("setup.session_s") = (System.nanoTime() - t0) / 1e9
     val confs = Seq(
       "spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes",
@@ -104,8 +111,9 @@ object Main {
       .map(k => k -> spark.conf.get(k, ""))
 
     try workload match {
-      case "daily_etl"   => DailyEtl.run(ctx)
-      case "index_churn" => IndexChurn.run(ctx)
+      case "daily_etl"     => DailyEtl.run(ctx)
+      case "index_churn"   => IndexChurn.run(ctx)
+      case "query_catalog" => QueryCatalog.run(ctx)
     } catch {
       case e: Throwable =>
         ctx.fail(s"workload aborted: ${e.getClass.getName}: ${String.valueOf(e.getMessage).take(300)}")
@@ -114,13 +122,14 @@ object Main {
     spark.stop() // drains the listener bus: every job event is in by now
 
     listener.foreach { l =>
-      // spans opened during set-up (warm-up ops) are not measured
+      // spans opened during set-up (the history day in daily_etl) are not measured
       val spans = ctx.tracer.spans.filter(_.start >= ctx.firstOpAt)
       val jobs = l.synchronized(l.jobs.values.toSeq)
       val bySpan = Layers.attribute(spans, jobs)
       workload match {
-        case "daily_etl"   => DailyEtl.layers(ctx, spans, bySpan, l)
-        case "index_churn" => IndexChurn.layers(ctx, spans, bySpan)
+        case "daily_etl"     => DailyEtl.layers(ctx, spans, bySpan, l)
+        case "index_churn"   => IndexChurn.layers(ctx, spans, bySpan)
+        case "query_catalog" => QueryCatalog.layers(ctx, spans, bySpan)
       }
       writeTrace(s"$work/trace.json", spans, jobs, bySpan, l)
     }

@@ -135,10 +135,8 @@ object Layers {
       if (n % 2 == 1) v(n / 2) else (v(n / 2 - 1) + v(n / 2)) / 2
     }
 
-  /** Counters of one span occurrence; `opWall` is the wall of the timed op
-    * (the parent span) it ran in.
-    */
-  final case class Occ(wall: Double, opWall: Double, jobs: Seq[JobRec], cores: Int) {
+  /** Counters of one span occurrence. */
+  final case class Occ(wall: Double, jobs: Seq[JobRec], cores: Int) {
     def tasks: Int = jobs.map(_.tasks).sum
     def taskS: Double = jobs.map(_.taskMs).sum / 1000.0
     def busy: Double = if (wall > 0) taskS / (wall * cores) else 0.0
@@ -150,15 +148,12 @@ object Layers {
   /** Median over the occurrences of span `name` of the named counters. */
   def spanCounters(name: String, spans: Seq[Span], byspan: Map[Int, Seq[JobRec]],
                    cores: Int, counters: Seq[String]): Seq[(String, Double)] = {
-    def wall(s: Span) = (s.end - s.start) / 1000.0
-    val byId = spans.map(s => s.id -> s).toMap
     val occs = spans.filter(_.name == name).map { s =>
-      Occ(wall(s), byId.get(s.parent).map(wall).getOrElse(0.0), byspan.getOrElse(s.id, Nil), cores)
+      Occ((s.end - s.start) / 1000.0, byspan.getOrElse(s.id, Nil), cores)
     }
     counters.map { c =>
       val f: Occ => Double = c match {
         case "wall_s"       => _.wall
-        case "wall_share"   => o => if (o.opWall > 0) o.wall / o.opWall else 0.0
         case "jobs"         => _.jobs.size.toDouble
         case "tasks"        => _.tasks.toDouble
         case "task_s"       => _.taskS
